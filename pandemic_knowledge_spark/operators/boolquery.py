@@ -378,20 +378,12 @@ def _fuzzy_clause_selection(spark, df_t, clause: dict) -> DataFrame:
     q_terms = sorted(set(query_terms(clause["fuzzy"])))
     if not q_terms:
         raise ValueError("bool fuzzy clause has no tokenizable terms")
-    max_expansions = int(clause.get("max_expansions", 50))
-    prefix_length = int(clause.get("prefix_length", 0))
-    bands = [(t, fuzzy_auto_band(len(t))) for t in q_terms]
-    exact_terms = sorted(t for t, b in bands if b == 0)
-    fuzz_rows = [
-        (t, b, length)
-        for t, b in bands
-        if b > 0
-        for length in range(max(1, len(t) - b), len(t) + b + 1)
-    ]
     # the selection carries (term, df) — it IS the bounded build side; no
     # second df_t pass to re-attach df (r13 optimization, guide §2.4)
     return _fuzzy_selected(
-        spark, df_t, fuzz_rows, exact_terms, max_expansions, prefix_length
+        spark, df_t, q_terms,
+        int(clause.get("max_expansions", 50)),
+        int(clause.get("prefix_length", 0)),
     )
 
 
@@ -518,7 +510,8 @@ def _scored_frames(docs, id_col, text_col, scored):
     frames — the shared front half of :func:`bool_search` and
     :func:`dis_max_search`: one selected-TF sliver feeds every
     match/fuzzy clause, phrase clauses fold their corpus constants to
-    literals via one bounded one-row collect (the stats_scalars idiom),
+    literals via one bounded one-row collect (as index probes fold
+    ``SearchIndex.stats``),
     prefix clauses are constant_score scan-side projections.
 
     Validation-order note (r13 advice): phrase-clause validation (empty
@@ -1734,47 +1727,23 @@ ORDER BY score DESC, doc_id LIMIT {k}
 # -------------------------------------------------------- indexed bool door
 
 
-def _index_stats_cols(index, frame: DataFrame) -> DataFrame:
-    if index.stats_scalars is not None:
-        n_docs, sum_dl = index.stats_scalars
-        return frame.withColumns(
-            {
-                "n_docs": F.lit(int(n_docs)).cast("long"),
-                "sum_dl": F.lit(int(sum_dl)).cast("long"),
-            }
-        )
-    return frame.crossJoin(F.broadcast(index.stats))
-
-
-def _index_stats_scalars(index) -> tuple:
-    if index.stats_scalars is not None:
-        return index.stats_scalars
-    row = index.stats.collect()[0]
-    return int(row["n_docs"]), int(row["sum_dl"] or 0)
-
-
 def _index_match_frame(index, terms, min_terms: int = 1) -> DataFrame:
     """Full (doc_id, cscore) BM25 frame for a term set, scored entirely
     from the bucket-pruned postings — the unlimited form of
-    operators.search.bm25_from_postings (same pruned-count df, same
-    formula, so the indexed door equals the corpus door to the bit).
-    ``min_terms`` enforces the match clause's term-level control
-    (operator and / minimum_should_match) as a count in the same grouped
-    aggregation — postings hold one row per (term, doc)."""
-    from pandemic_knowledge_spark.operators.search import term_bucket_py
+    operators.search.bm25_from_postings (the same scorer, so the indexed
+    door equals the corpus door to the bit). ``min_terms`` enforces the
+    match clause's term-level control (operator and /
+    minimum_should_match) as a count in the same grouped aggregation —
+    postings hold one row per (term, doc)."""
+    from pandemic_knowledge_spark.operators.search import _scored_postings
 
-    q = sorted(set(terms))
-    buckets = sorted({term_bucket_py(t) for t in q})
-    p = index.postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q)
-    )
-    df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = _attach_bm25_scores(
-        _index_stats_cols(index, p.join(F.broadcast(df_t), "term"))
-    )
-    agged = scored.groupBy("doc_id").agg(
-        F.sum("term_score").alias("cscore"),
-        F.count(F.lit(1)).alias("__nt"),
+    agged = (
+        _scored_postings(index.postings, index.stats, terms)
+        .groupBy("doc_id")
+        .agg(
+            F.sum("term_score").alias("cscore"),
+            F.count(F.lit(1)).alias("__nt"),
+        )
     )
     if min_terms > 1:
         agged = agged.where(F.col("__nt") >= F.lit(min_terms))
@@ -1798,9 +1767,6 @@ def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
             "indexed bool phrase clause needs a positional index: build "
             "with positional=True (and save() to persist)"
         )
-    dl_src = index.doc_ids
-    if dl_src is None:
-        dl_src = index.postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
     counts = (
         phrase_counts_from_postings(index.positional, phrase)
         if slop == 0
@@ -1812,8 +1778,8 @@ def _index_phrase_frame(index, phrase: str, slop: int = 0) -> DataFrame:
         .localCheckpoint(eager=False)  # count() below materializes (r13)
     )
     df_ph = pf.count()
-    n_docs, sum_dl = _index_stats_scalars(index)
-    joined = pf.join(dl_src.select("doc_id", "dl"), "doc_id")
+    n_docs, sum_dl = index.stats
+    joined = pf.join(index.doc_ids.select("doc_id", "dl"), "doc_id")
     avgdl = F.lit(float(sum_dl)) / F.lit(float(n_docs))
     idf = F.log(
         F.lit(1.0)
@@ -1927,12 +1893,6 @@ def bool_search_from_index(
         if minimum_should_match is not None
         else default_msm(must, should, filter)
     )
-    from pandemic_knowledge_spark.operators.search import (
-        _fuzzy_selected,
-        _probe_vocab,
-        fuzzy_auto_band,
-    )
-
     spark = index.postings.sparkSession
     parts = []
     for kind, clause in [("must", c) for c in must] + [("should", c) for c in should]:
@@ -1949,24 +1909,10 @@ def bool_search_from_index(
             q_terms = sorted(set(query_terms(clause["fuzzy"])))
             if not q_terms:
                 raise ValueError("bool fuzzy clause has no tokenizable terms")
-            max_expansions = int(clause.get("max_expansions", 50))
-            prefix_length = int(clause.get("prefix_length", 0))
-            bands = [(t, fuzzy_auto_band(len(t))) for t in q_terms]
-            exact_terms = sorted(t for t, b in bands if b == 0)
-            fuzz_rows = [
-                (t, b, length)
-                for t, b in bands
-                if b > 0
-                for length in range(max(1, len(t) - b), len(t) + b + 1)
-            ]
-            # fuzz lengths PLUS exact-term lengths: _fuzzy_selected looks
-            # exact terms up in the vocabulary (for their df) now
-            v = _probe_vocab(
-                index.postings, index.vocab,
-                [r[2] for r in fuzz_rows] + [len(t) for t in exact_terms],
-            )
             selected = _fuzzy_selected(
-                spark, v, fuzz_rows, exact_terms, max_expansions, prefix_length
+                spark, index.vocab, q_terms,
+                int(clause.get("max_expansions", 50)),
+                int(clause.get("prefix_length", 0)),
             )
             # bounded: <= |query terms| * max_expansions rows
             sel_terms = sorted(r.term for r in selected.collect())
@@ -2007,10 +1953,7 @@ def bool_search_from_index(
     if parts:
         hits = _combine_scored(parts, len(must), msm)
     else:
-        dl_src = index.doc_ids
-        if dl_src is None:
-            dl_src = index.postings.select("doc_id").distinct()
-        hits = dl_src.select("doc_id", F.lit(0.0).alias("score"))
+        hits = index.doc_ids.select("doc_id", F.lit(0.0).alias("score"))
 
     for c in filter:
         hits = hits.join(_index_member_frame(index, c), "doc_id", "left_semi")

@@ -129,15 +129,6 @@ def exact_dedup(df: DataFrame, fp: Column, id_col: str) -> DataFrame:
     )
 
 
-def doc_shingle_sets(docs: DataFrame, id_col: str, text_col: str, k: int = 2) -> DataFrame:
-    toks = tokenize(text_col)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        shingles(toks, k).alias("sh"),
-        shingle_hashes(toks, k).alias("hs"),
-    ).filter(F.size("sh") > 0)
-
-
 def minhash_signature_agg(
     docs: DataFrame, id_col: str, text_col: str, k: int = 2, n_perm: int = N_PERM
 ) -> DataFrame:

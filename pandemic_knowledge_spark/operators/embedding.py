@@ -122,16 +122,3 @@ def sql_hash_embeddings_long(
         + "\nSELECT doc_id, dim, v FROM dense\n"
     )
 
-
-def sql_hash_embeddings(
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    dim: int = DIM,
-) -> str:
-    """DuckDB SQL replaying :func:`hash_embeddings` — same md5 dimension
-    hash, same sign rule, same dense assembly."""
-    return (
-        _sql_dense_ctes(table, id_col, text_col, dim)
-        + "\nSELECT doc_id, list(v ORDER BY dim) AS emb\nFROM dense GROUP BY doc_id\n"
-    )

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandemic_knowledge_spark.functions.text import query_terms, sql_tokenize, tokenize
+from pandemic_knowledge_spark.operators.dispatch import size_estimate
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -50,12 +51,16 @@ def _vocab_df(docs, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _dl_stats(frame: DataFrame) -> DataFrame:
+    """One-row (n_docs, sum_dl) over a frame with one ``dl`` row per doc —
+    exact integer sums, so every scorer agrees with the DuckDB oracle."""
+    return frame.agg(F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl"))
+
+
 def _corpus_stats(docs, text_col: str) -> DataFrame:
     """One-row (n_docs, sum_dl) corpus stats — one pruned scan, no
     exchange before the single-row aggregate."""
-    return docs.select(F.size(tokenize(text_col)).alias("dl")).agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
+    return _dl_stats(docs.select(F.size(tokenize(text_col)).alias("dl")))
 
 
 def _selected_tf(docs, id_col: str, text_col: str, df_sel: DataFrame,
@@ -181,9 +186,7 @@ def _literal_tf_with_stats(docs, id_col: str, text_col: str,
     base = docs.select(
         F.col(id_col).alias("doc_id"), tokenize(text_col).alias("toks")
     ).withColumn("dl", F.size("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
+    stats = _dl_stats(base)
     if q_terms:
         tf_structs = F.array(
             *[
@@ -980,21 +983,13 @@ def fuzzy_match_search(
         return docs.sparkSession.createDataFrame(
             [], "doc_id %s, score double" % docs.schema[id_col].dataType.simpleString()
         )
-    bands = [(t, fuzzy_auto_band(len(t))) for t in q_terms]
-    exact_terms = sorted(t for t, b in bands if b == 0)
-    fuzz_rows = [
-        (t, b, length)
-        for t, b in bands
-        if b > 0
-        for length in range(max(1, len(t) - b), len(t) + b + 1)
-    ]
     # r13 plan shape (guide §2.3/§8): vocabulary + stats + selected-TF
     # scans instead of the corpus-wide TF shuffle/checkpoint; the
     # expansion carries (term, df) — it IS the bounded build side
     df_t = _vocab_df(docs, id_col, text_col)
     stats = _corpus_stats(docs, text_col)
     df_sel = _fuzzy_selected(
-        docs.sparkSession, df_t, fuzz_rows, exact_terms, max_expansions, prefix_length
+        docs.sparkSession, df_t, q_terms, max_expansions, prefix_length
     )
     scored = _attach_bm25_scores(
         _selected_tf(docs, id_col, text_col, df_sel, stats)
@@ -1005,37 +1000,37 @@ def fuzzy_match_search(
 def _fuzzy_selected(
     spark,
     vocab: DataFrame,
-    fuzz_rows: list,
-    exact_terms: list,
+    q_terms: list,
     max_expansions: int,
     prefix_length: int,
 ) -> DataFrame:
-    """The shared fuzzy expansion: admissible-length equi-join of the
-    (term, df) vocabulary against the literal (qterm, band, length) rows,
-    levenshtein on the sliver, per-qterm (distance, df DESC, term) cap,
-    union with the band-0 exact terms, distinct. Used by BOTH the
-    corpus-scan and the index-probe forms so the expansion rule can't
-    fork.
+    """The shared fuzzy expansion: each query term's AUTO band
+    (:func:`fuzzy_auto_band`) explodes into literal (qterm, band, length)
+    rows, an admissible-length equi-join against the (term, df)
+    vocabulary, levenshtein on the sliver, per-qterm (distance, df DESC,
+    term) cap, distinct. Used by the corpus-scan, index-probe and bool
+    forms alike so the expansion rule can't fork.
 
-    r13 optimization (guide §2.4): returns (term, df) — df rides along
-    from the vocabulary — so the corpus-scan caller broadcasts THIS frame
-    into scoring directly instead of re-joining (and therefore
-    re-computing) the full-vocabulary df aggregate to re-attach df. Exact
-    terms come from the vocabulary by a pushable isin instead of literal
-    rows: out-of-vocabulary exacts scored nothing under the old df re-join
-    too, so results are identical (the index-probe caller's collected term
-    set loses only terms with no postings). df is functionally dependent
-    on term, so the (term, df) distinct dedupes exactly as before."""
+    Returns (term, df) — df rides along from the vocabulary, so a
+    corpus-scan caller broadcasts THIS frame into scoring directly (r13
+    optimization, guide §2.4). Band-0 (exact) terms ride the SAME join as
+    (term, 0, len) rows: levenshtein ≤ 0 keeps exactly the in-vocabulary
+    term itself, so the vocabulary is walked once for fuzzy and exact
+    terms together, and out-of-vocabulary exacts select nothing. A
+    ``tlen``-partitioned vocabulary (the index's terms-dictionary sidecar)
+    is pruned to the admissible lengths first — dictionary slivers only,
+    like ES's FST walk."""
     from pyspark.sql.window import Window
 
-    # Band-0 (exact) terms ride the SAME admissible-length equi-join as
-    # literal (term, band=0, len) rows — levenshtein ≤ 0 keeps exactly the
-    # in-vocabulary term itself, its own 1-row qterm partition trivially
-    # passes the cap — so the vocabulary is walked ONCE for fuzzy and
-    # exact terms together instead of a second filter pass for the exacts.
-    all_rows = list(fuzz_rows) + [(t, 0, len(t)) for t in exact_terms]
-    qf = spark.createDataFrame(all_rows, "qterm string, band int, tlen int")
-    if "tlen" not in vocab.columns:
+    rows = [
+        (t, b, length)
+        for t, b in ((t, fuzzy_auto_band(len(t))) for t in q_terms)
+        for length in range(max(1, len(t) - b), len(t) + b + 1)
+    ]
+    qf = spark.createDataFrame(rows, "qterm string, band int, tlen int")
+    if "tlen" in vocab.columns:
+        vocab = vocab.filter(F.col("tlen").isin(sorted({r[2] for r in rows})))
+    else:
         vocab = vocab.withColumn("tlen", F.length("term"))
     cand = (
         vocab.join(F.broadcast(qf), "tlen")
@@ -1058,105 +1053,65 @@ def _fuzzy_selected(
     return selected.distinct()
 
 
-def _probe_vocab(postings: DataFrame, vocab: DataFrame | None, lengths) -> DataFrame:
-    """The term dictionary a probe expands against. With a persisted
-    ``vocab`` sidecar (see :meth:`SearchIndex.save`) the admissible term
-    LENGTHS prune its ``tlen`` partitions — the parquet analogue of ES
-    seeking the per-segment FST instead of touching postings; without one
-    (legacy layouts, ad-hoc posting frames) fall back to the one
-    map-side-combined count over the postings ((doc, term) rows are
-    unique, so the count IS the doc frequency — the same derivation
-    :func:`bm25_from_postings` uses)."""
-    if vocab is not None:
-        lens = sorted(set(lengths))
-        return vocab.filter(F.col("tlen").isin(lens)) if lens else vocab
-    return postings.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-
-
 def fuzzy_match_from_postings(
     postings: DataFrame,
-    stats,
+    stats: tuple,
+    vocab: DataFrame,
     query: str,
     k: int = 10,
     max_expansions: int = 50,
     prefix_length: int = 0,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """``fuzzy_match_search`` probed from a persisted index — ES's actual
-    fuzzy execution shape (expand against the term dictionary, then run a
+    """``fuzzy_match_search`` probed from an index — ES's actual fuzzy
+    execution shape (expand against the term dictionary, then run a
     pruned terms query). Identical output to the corpus-scan form over
     the same corpus (same AUTO bands, same expansion cap, same BM25 —
     pinned by ``tests/test_engine.py``).
 
-    The vocabulary (term, df) comes from :func:`_probe_vocab` — the
-    ``tlen``-partition-pruned terms-dictionary sidecar when the index has
-    one (nothing but dictionary slivers are scanned before candidates are
-    known, like ES's FST walk), else one map-side-combined count over the
-    postings; the shared :func:`_fuzzy_selected` expansion runs
-    distributed, and the bounded selection (≤ query terms ×
-    max_expansions rows — ES's rewrite is capped identically) collects to
-    the driver so the scoring probe can enumerate its crc32 BUCKETS and
-    get parquet partition pruning, exactly like the MLT probe's second
-    phase."""
+    The shared :func:`_fuzzy_selected` expansion runs against the
+    ``tlen``-pruned terms dictionary (nothing but dictionary slivers are
+    scanned before candidates are known), and the bounded selection (≤
+    query terms × max_expansions rows — ES's rewrite is capped
+    identically) collects to the driver so the scoring probe can
+    enumerate its crc32 BUCKETS and get parquet partition pruning,
+    exactly like the MLT probe's second phase."""
     q_terms = sorted(set(query_terms(query)))
-    if not q_terms:
-        return bm25_from_postings(postings, stats, "", k)
-    bands = [(t, fuzzy_auto_band(len(t))) for t in q_terms]
-    exact_terms = sorted(t for t, b in bands if b == 0)
-    fuzz_rows = [
-        (t, b, length)
-        for t, b in bands
-        if b > 0
-        for length in range(max(1, len(t) - b), len(t) + b + 1)
-    ]
-    # prune the dictionary to the fuzz lengths PLUS the exact terms'
-    # lengths — _fuzzy_selected now looks exact terms up in the vocabulary
-    # (for their df) instead of injecting literal rows
-    v = _probe_vocab(
-        postings, vocab,
-        [r[2] for r in fuzz_rows] + [len(t) for t in exact_terms],
-    )
-    selected = _fuzzy_selected(
-        postings.sparkSession, v, fuzz_rows, exact_terms,
-        max_expansions, prefix_length,
-    )
-    sel_terms = sorted(r.term for r in selected.collect())
-    if not sel_terms:
-        return bm25_from_postings(postings, stats, "", k)
+    sel_terms = []
+    if q_terms:
+        selected = _fuzzy_selected(
+            postings.sparkSession, vocab, q_terms, max_expansions, prefix_length
+        )
+        sel_terms = sorted(r.term for r in selected.collect())
     return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
 
 
 def prefix_search_from_postings(
     postings: DataFrame,
-    stats,
+    stats: tuple,
+    vocab: DataFrame,
     query: str,
     k: int = 10,
     max_expansions: int = 50,
-    vocab: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`prefix_search` probed from a persisted index — the
-    per-keystroke path of the reference's search box
+    """:func:`prefix_search` probed from an index — the per-keystroke
+    path of the reference's search box
     (/root/reference/news_app/app/app/src/SearchUI.js:45-46): the
-    unfinished token expands against the term dictionary (the ``vocab``
-    sidecar when present — row-group min/max on the term-sorted files
-    prunes inside each length partition; otherwise one postings count),
-    then the bounded expansion set (≤ terms + max_expansions) probes the
-    bucket-pruned postings. Identical output to the corpus-scan form."""
+    unfinished token expands against the terms dictionary (row-group
+    min/max on the term-sorted sidecar files prunes inside each length
+    partition), then the bounded expansion set (≤ terms + max_expansions)
+    probes the bucket-pruned postings. Identical output to the
+    corpus-scan form."""
     toks = query_terms(query)
     if not toks:
         return bm25_from_postings(postings, stats, "", k)
     *full_terms, prefix = toks
-    full_terms = sorted(set(full_terms))
-    v = _probe_vocab(postings, vocab, ())
     expansions = (
-        v.filter(F.col("term").startswith(prefix))
+        vocab.filter(F.col("term").startswith(prefix))
         .orderBy(F.desc("df"), F.col("term"))
         .limit(max_expansions)
         .select("term")
     )
     sel_terms = sorted({r.term for r in expansions.collect()} | set(full_terms))
-    if not sel_terms:
-        return bm25_from_postings(postings, stats, "", k)
     return bm25_from_postings(postings, stats, " ".join(sel_terms), k)
 
 
@@ -1167,17 +1122,17 @@ def term_suggest_from_vocab(
     prefix_length: int = 1,
     k: int = 5,
 ) -> DataFrame:
-    """:func:`term_suggest` probed from a term dictionary (the persisted
-    ``vocab`` sidecar or the in-memory cached one) — identical output to
-    the corpus-scan form, but per keystroke it touches only the ``tlen``
-    partitions inside the ±``max_edits`` length band (edit distance can
-    never beat the length gap), never the postings, never the corpus."""
+    """:func:`term_suggest` probed from an index's terms dictionary —
+    identical output to the corpus-scan form, but per keystroke it
+    touches only the ``tlen`` partitions inside the ±``max_edits`` length
+    band (edit distance can never beat the length gap), never the
+    postings, never the corpus."""
     q = term.lower()
     lens = list(range(max(1, len(q) - max_edits), len(q) + max_edits + 1))
-    v = _probe_vocab(None, vocab, lens) if "tlen" in vocab.columns else vocab
     pref = q[: max(0, prefix_length)]
-    cand = v.filter(
-        (F.substring("term", 1, len(pref)) == F.lit(pref))
+    cand = vocab.filter(
+        F.col("tlen").isin(lens)
+        & (F.substring("term", 1, len(pref)) == F.lit(pref))
         & (F.abs(F.length("term") - F.lit(len(q))) <= F.lit(max_edits))
         & (F.col("term") != F.lit(q))
     )
@@ -1365,7 +1320,7 @@ def linear_fuse(
 
 def more_like_this_from_postings(
     postings: DataFrame,
-    stats,
+    stats: tuple,
     src_doc_id,
     k: int = 10,
     max_query_terms: int = 8,
@@ -1402,10 +1357,7 @@ def more_like_this_from_postings(
             Decimal(repr(x)).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP)
         )
 
-    if isinstance(stats, tuple):
-        n_docs = int(stats[0])
-    else:
-        n_docs = int(stats.collect()[0]["n_docs"])
+    n_docs = stats[0]
     src_rows = (
         postings.filter(F.col("doc_id") == F.lit(src_doc_id))
         .filter(F.col("tf") >= F.lit(min_term_freq))
@@ -1923,9 +1875,7 @@ def build_postings(docs: DataFrame, id_col: str, text_col: str) -> tuple[DataFra
         docs.select(F.col(id_col).alias("doc_id"), F.col(text_col)),
         toks=tokenize(text_col),
     ).withColumn("dl", F.size("toks"))
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    )
+    stats = _dl_stats(base)
     postings = (
         base.select("doc_id", "dl", F.explode("toks").alias("term"))
         .groupBy("doc_id", "dl", "term")
@@ -2003,97 +1953,148 @@ def _term_score(idf, tf, dl, avgdl):
     )
 
 
-# Pruned-candidate size below which the probe takes the single-scan window
-# tier (one job, no broadcast round). Above it — or when the estimate is
-# unusable — the broadcast-df tier's map-side-combined count is the safe
-# shape. 64 MiB of matching postings is far past interactive anyway.
+# Whole-index size estimate below which SearchIndex.search takes the
+# single-scan window tier (one job, no broadcast round). Above it — or
+# when the estimate is unusable — the broadcast-df tier's map-side-combined
+# count is the safe shape. 64 MiB of postings is far past interactive.
 PROBE_WINDOW_MAX_BYTES = 64 << 20
 
 
-def bm25_from_postings(
-    postings: DataFrame, stats, query: str, k: int = 10,
-    after: tuple | None = None,
+def _scored_postings(
+    postings: DataFrame, stats: tuple, terms, window: bool = False
 ) -> DataFrame:
-    """BM25 top-k scored ENTIRELY from the posting tables — no corpus scan,
-    no tokenize. Identical output to :func:`bm25_search` (same tf/dl/df/
-    corpus stats, same formula, same 4 dp rounding).
+    """The query terms' posting rows with their BM25 ``term_score`` — the
+    one postings scorer behind every index probe (plain, fuzzy, prefix,
+    more_like_this and the indexed bool door). No corpus scan, no
+    tokenize: the bucket predicate prunes parquet partitions (a query's
+    terms map to a handful of the 64 buckets) and the term predicate row
+    groups. The ``(n_docs, sum_dl)`` corpus stats fold to literals; df per
+    term is recomputed from the pruned rows ((doc, term) rows are unique,
+    so a count per term IS the document frequency) in one of two shapes:
 
-    df per term is recomputed from the PRUNED postings (the filter keeps
-    only query-term rows, and (doc_id, term) rows are unique, so a plain
-    count per term IS the document frequency) — cheaper than persisting and
-    probing a second table. The partial count combines map-side and the
-    tiny (≤ #terms rows) result broadcasts, so the candidate posting rows
-    themselves NEVER shuffle by term: a stop-word-frequency term whose
-    posting list is millions of rows costs one broadcast int, not a
-    single-task window partition. That skew-safety is why this is the
-    scale tier (see :func:`bm25_from_postings_small` and the dispatch in
-    :meth:`SearchIndex.search`).
+    - ``window=False``, the scale tier: a map-side-combined count whose
+      tiny (≤ #terms rows) result broadcasts back, so posting rows never
+      shuffle by term — a stop-word whose list is millions of rows costs
+      one broadcast int, not a single-task partition;
+    - ``window=True``, the interactive tier: ``count() OVER (PARTITION BY
+      term)`` in the same scan — one job, no broadcast round (measured
+      ~0.14 s vs ~0.26 s at sf0.1, cache-cleared), but each term's whole
+      posting list lands in one task, a skew bottleneck on a 100 TB corpus;
+      :meth:`SearchIndex.search` keeps it behind the size gate.
 
-    ``stats`` is either the one-row (n_docs, sum_dl) DataFrame (in-memory
-    build path) or a plain ``(n_docs, sum_dl)`` tuple (loaded-index path —
-    folds to literals, skipping the crossJoin broadcast round)."""
-    q_terms = sorted(set(query_terms(query)))
-    buckets = sorted({term_bucket_py(t) for t in q_terms})
-    p = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q_terms)
-    )
-    df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    scored = p.join(F.broadcast(df_t), "term")
-    if isinstance(stats, tuple):
-        n_docs, sum_dl = stats
-        scored = scored.withColumns(
-            {"n_docs": F.lit(n_docs).cast("long"), "sum_dl": F.lit(sum_dl).cast("long")}
-        )
-    else:
-        scored = scored.crossJoin(F.broadcast(stats))
-    scored = (
-        scored.withColumn("avgdl", F.col("sum_dl").cast("double") / F.col("n_docs"))
-        .withColumn(
-            "idf",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-            ),
-        )
-        .withColumn(
-            "term_score",
-            _term_score(F.col("idf"), F.col("tf"), F.col("dl"), F.col("avgdl")),
-        )
-    )
-    return _bm25_score_agg(scored, k, after=after)
-
-
-def bm25_from_postings_small(
-    postings: DataFrame, n_docs: int, sum_dl: int, query: str, k: int = 10,
-    after: tuple | None = None,
-) -> DataFrame:
-    """Interactive small-candidate probe tier: df via ``count() OVER
-    (PARTITION BY term)`` in the SAME scan — one job, no broadcast round
-    (measured ~0.14 s vs ~0.26 s for the broadcast form at sf0.1,
-    cache-cleared). Identical output to :func:`bm25_from_postings`.
-
-    The window shuffles every candidate posting row by term, putting each
-    term's whole posting list in one task — fine below
-    :data:`PROBE_WINDOW_MAX_BYTES`, a skew bottleneck on a 100 TB corpus
-    where one common term can match most documents; the dispatcher in
-    :meth:`SearchIndex.search` keeps this tier behind the size gate."""
+    Scores are identical either way, and identical to :func:`bm25_search`
+    (same tf/dl/df/corpus stats, same formula)."""
     from pyspark.sql import Window
 
-    q_terms = sorted(set(query_terms(query)))
-    buckets = sorted({term_bucket_py(t) for t in q_terms})
-    p = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(q_terms)
-    )
-    avgdl = F.lit(sum_dl).cast("double") / F.lit(n_docs)
+    q = sorted(set(terms))
+    buckets = sorted({term_bucket_py(t) for t in q})
+    p = postings.filter(F.col("bucket").isin(buckets) & F.col("term").isin(q))
+    if window:
+        p = p.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
+    else:
+        df_t = p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
+        p = p.join(F.broadcast(df_t), "term")
+    n_docs, sum_dl = stats
+    # the same double quotient as the corpus scorers' sum_dl / n_docs;
+    # an empty index (no posting rows to score) folds to 0.0, not an error
+    avgdl = F.lit(float(sum_dl) / n_docs if n_docs else 0.0)
     idf = F.log(
         F.lit(1.0)
         + (F.lit(n_docs) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
     )
-    scored = (
-        p.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("term")))
-        .withColumn("term_score", _term_score(idf, F.col("tf"), F.col("dl"), avgdl))
+    return p.withColumn(
+        "term_score", _term_score(idf, F.col("tf"), F.col("dl"), avgdl)
     )
+
+
+def bm25_from_postings(
+    postings: DataFrame, stats: tuple, query: str, k: int = 10,
+    after: tuple | None = None,
+) -> DataFrame:
+    """BM25 top-k scored entirely from the posting tables, scale tier
+    (broadcast df, see :func:`_scored_postings`). Identical output to
+    :func:`bm25_search`. ``stats`` is the index's ``(n_docs, sum_dl)``;
+    ``after`` the search_after cursor (:func:`_bm25_score_agg`)."""
+    scored = _scored_postings(postings, stats, query_terms(query))
     return _bm25_score_agg(scored, k, after=after)
+
+
+def bm25_from_postings_small(
+    postings: DataFrame, stats: tuple, query: str, k: int = 10,
+    after: tuple | None = None,
+) -> DataFrame:
+    """:func:`bm25_from_postings`, interactive tier (window df — one job
+    per probe, see :func:`_scored_postings`). Identical output."""
+    scored = _scored_postings(postings, stats, query_terms(query), window=True)
+    return _bm25_score_agg(scored, k, after=after)
+
+
+def _scalar_stats(stats: DataFrame) -> tuple:
+    """A one-row (n_docs, sum_dl) frame as exact ints (one job)."""
+    row = stats.collect()[0]
+    return int(row["n_docs"]), int(row["sum_dl"] or 0)
+
+
+def _doc_ids_of(postings: DataFrame) -> DataFrame:
+    """The indexed-id set (doc_id, dl) of a posting frame — the
+    incremental-ingest dedup guard."""
+    return postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+
+
+def _vocab_of(postings: DataFrame) -> DataFrame:
+    """The terms dictionary (term, df, tlen) of a posting frame: (doc,
+    term) rows are unique, so a count per term IS the document frequency;
+    ``tlen`` is the fuzzy/suggest pruning axis."""
+    return (
+        postings.groupBy("term")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .withColumn("tlen", F.length("term"))
+    )
+
+
+def _merged_vocab(vocab: DataFrame, new_postings: DataFrame) -> DataFrame:
+    """``vocab`` plus a batch's term counts. Per-term df sums exactly
+    because both callers (:meth:`SearchIndex.merge`,
+    :meth:`SearchIndex.append_save`) anti-join the doc_ids guard first:
+    old and new doc sets are disjoint, so each (term, doc) posting lands
+    on exactly one side. Dictionary-sized work, never postings-sized."""
+    return (
+        vocab.unionByName(_vocab_of(new_postings))
+        .groupBy("term", "tlen")
+        .agg(F.sum("df").cast("long").alias("df"))
+        .select("term", "df", "tlen")
+    )
+
+
+def _bucket_laid(frame: DataFrame) -> DataFrame:
+    """A posting-shaped frame in the persisted order: one exchange on
+    ``bucket``, then a (bucket, term) local sort — a prefix the file
+    writer's required ordering (its dynamic-partition column) is satisfied
+    by, so the writer inserts no second sort, and the within-file term
+    order (row-group min/max pruning) is guaranteed. (An uncached build
+    saves through :func:`_postings_bucket_laid` instead, which shares the
+    exchange with the TF aggregate.)"""
+    return frame.repartition("bucket").sortWithinPartitions("bucket", "term")
+
+
+def _write_bucketed(laid: DataFrame, dest: str, mode: str = "overwrite") -> None:
+    """The one writer of the bucket layout (postings and positions): hive
+    partitions by term bucket over term-sorted files, so a probe reads
+    only its terms' buckets and, inside them, only matching row groups."""
+    laid.write.mode(mode).partitionBy("bucket").parquet(dest)
+
+
+def _write_vocab(vocab: DataFrame, path: str) -> None:
+    """The one writer of the terms-dictionary layout: hive partitions by
+    term length (fuzzy/suggest probes read only the admissible lengths)
+    over term-sorted files (prefix probes prune row groups)."""
+    (
+        vocab.repartition("tlen")
+        .sortWithinPartitions("tlen", "term")
+        .write.mode("overwrite")
+        .partitionBy("tlen")
+        .parquet(f"{path}/vocab")
+    )
 
 
 def _layout_fingerprint(frame: DataFrame, subdir: str) -> str:
@@ -2132,45 +2133,39 @@ def _write_index_sidecars(
     spark,
     path: str,
     postings: DataFrame,
-    fingerprint: str | None = None,
+    fingerprint: str,
+    stats: tuple | None = None,
     pos_fingerprint: str | None = None,
 ) -> None:
-    """(Re)derive the three sidecars from the persisted postings: the
-    full-rebuild path used by :meth:`SearchIndex.save` and by the load-time
-    repair. ``doc_ids`` and ``vocab`` are each one aggregate over the
-    postings — paid once per ingest (or once per crash), never per probe.
-    ``meta`` (stats + postings fingerprint) goes LAST: until it commits,
-    the layout reads as stale and repairs again — overwrite-in-progress
-    can therefore never masquerade as fresh."""
-    doc_ids = (
-        postings.groupBy("doc_id")
-        .agg(F.first("dl").alias("dl"))
+    """(Re)derive the doc_ids and vocab sidecars from ``postings``, then
+    commit ``meta``. Shared by :meth:`SearchIndex.save` (its in-memory
+    laid postings and the build's full-corpus stats) and the load-time
+    repair (the persisted postings; ``stats=None`` derives postings-only
+    stats from the doc_ids aggregate). Each sidecar is one aggregate over
+    the postings — paid once per ingest (or once per crash), never per
+    probe — and the two writes are independent jobs, submitted
+    concurrently (Spark schedules jobs from several threads safely; on a
+    cluster they interleave their idle scheduling/IO phases). ``meta``
+    goes strictly LAST: until it commits, the layout reads as stale and
+    repairs again, so an overwrite in progress can never masquerade as
+    fresh."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    doc_ids = _doc_ids_of(postings)
+    if stats is None:
         # materialized once by the write below; the stats aggregate then
         # reads the cached blocks (lazy, r13)
-        .localCheckpoint(eager=False)
-    )
-    doc_ids.write.mode("overwrite").parquet(f"{path}/doc_ids")
-    (
-        postings.groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("tlen", F.length("term"))
-        .repartition("tlen")
-        .sortWithinPartitions("tlen", "term")
-        .write.mode("overwrite")
-        .partitionBy("tlen")
-        .parquet(f"{path}/vocab")
-    )
-    row = doc_ids.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("sum_dl")
-    ).collect()[0]
-    _write_index_meta(
-        spark,
-        path,
-        int(row["n_docs"]),
-        int(row["sum_dl"] or 0),
-        fingerprint or _postings_fingerprint(postings),
-        pos_fingerprint,
-    )
+        doc_ids = doc_ids.localCheckpoint(eager=False)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futs = [
+            pool.submit(doc_ids.write.mode("overwrite").parquet, f"{path}/doc_ids"),
+            pool.submit(_write_vocab, _vocab_of(postings), path),
+        ]
+        for f in futs:
+            f.result()
+    if stats is None:
+        stats = _scalar_stats(_dl_stats(doc_ids))
+    _write_index_meta(spark, path, *stats, fingerprint, pos_fingerprint)
 
 
 def _write_index_meta(
@@ -2204,38 +2199,32 @@ class SearchIndex:
     /root/reference/flow/scripts/insert_owid.py bulk(), and then every
     keystroke search is an index probe, never a corpus scan).
 
-    Persisted layout (:meth:`save`): ``postings/`` (the source of truth,
-    bucket-partitioned) plus three DERIVED sidecars — ``vocab/`` the terms
-    dictionary (term, df) partitioned by term length (ES's per-segment FST:
-    fuzzy/suggest/prefix probes expand against dictionary slivers, never
-    postings), ``doc_ids/`` the indexed-id set with dl norms (the
-    incremental-ingest dedup guard and the stats derivation), and ``meta``
-    one row (n_docs, sum_dl, postings-file fingerprint). Sidecars are
-    validated against the fingerprint at load and rebuilt from postings on
-    mismatch, so a crash anywhere in save/append degrades to a one-time
-    repair, never a wrong answer."""
+    Every index has the same shape, whichever way it was made (:meth:`build`,
+    :meth:`load`, :meth:`merge`, :meth:`append_save`):
 
-    def __init__(self, postings: DataFrame, stats: DataFrame,
-                 stats_scalars: tuple | None = None,
-                 index_bytes: int | None = None,
-                 vocab: DataFrame | None = None,
-                 doc_ids: DataFrame | None = None,
-                 positional: DataFrame | None = None) -> None:
+    - ``postings`` (bucket, term, doc_id, tf, dl) — the source of truth;
+    - ``stats`` — ``(n_docs, sum_dl)`` as exact ints, folded into every
+      probe as literals;
+    - ``vocab`` — the terms dictionary (term, df, tlen): fuzzy/suggest/
+      prefix probes expand against it, never against the postings;
+    - ``doc_ids`` — the indexed-id set (doc_id, dl), the incremental-ingest
+      dedup guard;
+    - ``index_bytes`` — the postings' Catalyst size estimate, the probe-tier
+      gate of :meth:`search`;
+    - ``positional`` — the opt-in positional postings, or None.
+
+    Persisted layout (:meth:`save`): ``postings/`` (bucket-partitioned)
+    plus three DERIVED sidecars — ``vocab/`` partitioned by term length
+    (ES's per-segment FST), ``doc_ids/``, and ``meta``, one row (n_docs,
+    sum_dl, postings-file fingerprint). Sidecars are validated against the
+    fingerprint at load and rebuilt from postings on mismatch, so a crash
+    anywhere in save/append degrades to a one-time repair, never a wrong
+    answer."""
+
+    def __init__(self, postings: DataFrame, stats: tuple, vocab: DataFrame,
+                 doc_ids: DataFrame, positional: DataFrame | None = None) -> None:
         self.postings = postings
         self.stats = stats
-        # (n_docs, sum_dl) as plain ints when known eagerly (loaded index):
-        # probes fold them to literals instead of crossJoining a one-row
-        # frame — one less broadcast round per query.
-        self.stats_scalars = stats_scalars
-        # Whole-index Catalyst size estimate, computed ONCE at load: the
-        # probe tier gate compares this stored int, not a per-query
-        # optimizer invocation (a py4j stats() round per probe measured
-        # ~0.1 s — half the interactive budget).
-        self.index_bytes = index_bytes
-        # Terms dictionary (term, df, tlen) and indexed-id set (doc_id, dl):
-        # persisted sidecars on a loaded index, cached derivations on an
-        # in-memory build, None on bare frames (probes fall back to the
-        # postings aggregate).
         self.vocab = vocab
         self.doc_ids = doc_ids
         # Positional postings (bucket, term, doc_id, positions) — an
@@ -2244,10 +2233,15 @@ class SearchIndex:
         # postings: present only on positional builds/layouts; phrase
         # probes require it.
         self.positional = positional
+        # Whole-index size estimate, taken ONCE here (no job): the probe
+        # tier gate compares this stored int, not a per-query optimizer
+        # invocation (a py4j stats() round per probe measured ~0.1 s —
+        # half the interactive budget).
+        self.index_bytes = size_estimate(postings)
         # (docs, id_col, text_col) of an uncached build: save() re-derives
         # the bucket-laid postings from this lineage with a single
         # exchange (_postings_bucket_laid) instead of repartitioning the
-        # aggregated frame a second time. None on loaded/bare/cached
+        # aggregated frame a second time. None on loaded/merged/cached
         # indexes (a warm cache is cheaper than re-tokenizing).
         self._lineage: tuple | None = None
 
@@ -2259,40 +2253,30 @@ class SearchIndex:
         memory). The terms dictionary and indexed-id set are derived and
         cached alongside, so interactive fuzzy/suggest/prefix probes
         aggregate the postings once per session, not once per keystroke.
+        The corpus stats are collected here (one job over the corpus —
+        zero-token docs count, exactly like the corpus-scan scorers).
         ``positional=True`` additionally builds the positional posting
         table (phrase probes; a second tokenize pass over the corpus)."""
         postings, stats = build_postings(docs, id_col, text_col)
-        vocab = (
-            postings.groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .withColumn("tlen", F.length("term"))
-        )
-        doc_ids = postings.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+        vocab, doc_ids = _vocab_of(postings), _doc_ids_of(postings)
         pos = (
             build_positional_postings(docs, id_col, text_col)
             if positional
             else None
         )
         if cache:
-            postings = postings.cache()
-            stats = stats.cache()
-            vocab = vocab.cache()
-            doc_ids = doc_ids.cache()
+            postings, vocab, doc_ids = postings.cache(), vocab.cache(), doc_ids.cache()
             if pos is not None:
                 pos = pos.cache()
-        idx = cls(postings, stats, vocab=vocab, doc_ids=doc_ids, positional=pos)
+        idx = cls(postings, _scalar_stats(stats), vocab, doc_ids, pos)
         if not cache:
             idx._lineage = (docs, id_col, text_col)
         return idx
 
     def warm(self) -> "SearchIndex":
         """Force materialization now (first search pays nothing)."""
-        self.postings.count()
-        self.stats.count()
-        if self.vocab is not None:
-            self.vocab.count()
-        if self.doc_ids is not None:
-            self.doc_ids.count()
+        for frame in (self.postings, self.vocab, self.doc_ids):
+            frame.count()
         return self
 
     def save(self, path: str, timings: dict | None = None) -> "SearchIndex":
@@ -2312,19 +2296,17 @@ class SearchIndex:
         moves, from the one code path that actually runs).
 
         Sidecars derive from the IN-MEMORY postings (r9 verdict task #4):
-        one eager checkpoint of the bucket-laid frame feeds the postings
-        write AND both sidecar aggregates, so nothing re-reads the files
-        just written and nothing re-runs the tokenize lineage twice more
-        (the pre-r10 shape re-scanned the written parquet once per
-        sidecar). Meta stats come from the build's full-corpus ``stats``
-        row — n_docs counts zero-token docs exactly like the corpus-scan
-        scorers, so a LOADED index now scores bit-identically to the
-        in-memory build even on corpora with empty documents (the r9
-        advisor's divergence; only the crash-REPAIR path, which has
-        nothing but postings to read, keeps the postings-only stats).
-        At cluster scale the checkpoint holds one copy of the postings in
-        executor memory/disk for the duration of the save — the same
-        footprint the write shuffle already has."""
+        one checkpoint of the bucket-laid frame feeds the postings write
+        AND both sidecar aggregates, so nothing re-reads the files just
+        written and nothing re-runs the tokenize lineage twice more. Meta
+        stats are this index's ``stats`` — for a build, the full corpus
+        (zero-token docs included), so a LOADED index scores
+        bit-identically to the in-memory build even on corpora with empty
+        documents (only the crash-REPAIR path, which has nothing but
+        postings to read, keeps postings-only stats). At cluster scale the
+        checkpoint holds one copy of the postings in executor memory/disk
+        for the duration of the save — the same footprint the write
+        shuffle already has."""
         import time as _time
 
         t0 = _time.perf_counter()
@@ -2332,95 +2314,24 @@ class SearchIndex:
             # uncached build: re-derive the layout from the corpus with ONE
             # exchange (bucket-first aggregate) instead of shuffling the
             # aggregated postings a second time — see _postings_bucket_laid.
-            laid = _postings_bucket_laid(*self._lineage).localCheckpoint(
-                eager=False
-            )
+            laid = _postings_bucket_laid(*self._lineage)
         else:
-            # loaded / bare / cached postings: lay out the existing frame.
-            # Sorting (bucket, term) — not just term — satisfies the file
-            # writer's required ordering so it inserts no second sort.
-            laid = (
-                self.postings.repartition("bucket")
-                .sortWithinPartitions("bucket", "term")
-                .localCheckpoint(eager=False)
-            )
-        (
-            laid.write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(f"{path}/postings")
-        )
+            laid = _bucket_laid(self.postings)
+        laid = laid.localCheckpoint(eager=False)
+        _write_bucketed(laid, f"{path}/postings")
         t1 = _time.perf_counter()
         spark = self.postings.sparkSession
         pos_fp = None
         if self.positional is not None:
-            (
-                self.positional.repartition("bucket")
-                .sortWithinPartitions("bucket", "term")
-                .write.mode("overwrite")
-                .partitionBy("bucket")
-                .parquet(f"{path}/positions")
-            )
+            _write_bucketed(_bucket_laid(self.positional), f"{path}/positions")
             pos_fp = _layout_fingerprint(
                 spark.read.parquet(f"{path}/positions"), "positions"
             )
         t2 = _time.perf_counter()
-
-        # The two sidecar writes and the postings-fingerprint listing are
-        # INDEPENDENT jobs over the same checkpointed frame / already-written
-        # files — submit them concurrently (Spark sessions schedule jobs
-        # from multiple threads safely; on a cluster the three short jobs
-        # interleave their idle scheduling/IO phases, locally they overlap
-        # task-launch overhead). Crash semantics unchanged: meta — the
-        # commit record — is still written strictly LAST, after every
-        # future has completed.
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_doc_ids():
-            (
-                laid.groupBy("doc_id")
-                .agg(F.first("dl").alias("dl"))
-                .write.mode("overwrite")
-                .parquet(f"{path}/doc_ids")
-            )
-
-        def _write_vocab():
-            (
-                laid.groupBy("term")
-                .agg(F.count(F.lit(1)).alias("df"))
-                .withColumn("tlen", F.length("term"))
-                .repartition("tlen")
-                .sortWithinPartitions("tlen", "term")
-                .write.mode("overwrite")
-                .partitionBy("tlen")
-                .parquet(f"{path}/vocab")
-            )
-
-        def _fingerprint():
-            # fingerprint witness stays over the WRITTEN files (a
-            # listing-only read — no data scan): load() validates against
-            # the same listing
-            return _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_write_doc_ids),
-                pool.submit(_write_vocab),
-                pool.submit(_fingerprint),
-            ]
-            _, _, fingerprint = (f.result() for f in futs)
-        if self.stats_scalars is not None:
-            n_docs, sum_dl = self.stats_scalars
-        else:
-            row = self.stats.collect()[0]
-            n_docs, sum_dl = int(row["n_docs"]), int(row["sum_dl"] or 0)
-        _write_index_meta(
-            spark,
-            path,
-            n_docs,
-            sum_dl,
-            fingerprint,
-            pos_fp,
-        )
+        # the fingerprint witnesses the WRITTEN files (a listing-only read,
+        # no data scan): load() validates against the same listing
+        fingerprint = _postings_fingerprint(spark.read.parquet(f"{path}/postings"))
+        _write_index_sidecars(spark, path, laid, fingerprint, self.stats, pos_fp)
         laid.unpersist()
         if timings is not None:
             timings["postings_sec"] = round(t1 - t0, 3)
@@ -2435,17 +2346,16 @@ class SearchIndex:
         on mismatch — legacy postings-only layouts, or a crash between a
         postings append and its sidecar refresh — rebuild the sidecars
         from the postings once. Corpus stats (n_docs, sum_dl) then come
-        from the meta row as driver-side literals, so index-open costs a
-        file listing + a one-row read instead of the full-postings
-        aggregate, and every probe touches only pruned slivers. The meta
-        stats were recorded by save() from the FULL corpus (zero-token
-        docs included), so loaded-index scores are bit-identical to the
-        in-memory build even on corpora with empty documents. Only the
-        crash-REPAIR path below, which has nothing but posting rows to
-        read, falls back to postings-only stats (a repaired index on a
-        corpus with empty docs scores with a slightly smaller n_docs
-        until the next save — empty docs never match anything, so only
-        idf norms shift)."""
+        from the meta row, so index-open costs a file listing + a one-row
+        read instead of the full-postings aggregate, and every probe
+        touches only pruned slivers. The meta stats were recorded by
+        save() from the FULL corpus (zero-token docs included), so
+        loaded-index scores are bit-identical to the in-memory build even
+        on corpora with empty documents. Only the crash-REPAIR path below,
+        which has nothing but posting rows to read, falls back to
+        postings-only stats (a repaired index on a corpus with empty docs
+        scores with a slightly smaller n_docs until the next save — empty
+        docs never match anything, so only idf norms shift)."""
         postings = spark.read.parquet(f"{path}/postings")
         fingerprint = _postings_fingerprint(postings)
         meta = _read_index_meta(spark, path)
@@ -2455,7 +2365,7 @@ class SearchIndex:
             # it matches the postings — disable it (pos_fingerprint=None)
             # rather than risk silently inconsistent phrase results; a
             # positional save() re-enables it.
-            _write_index_sidecars(spark, path, postings, fingerprint=fingerprint)
+            _write_index_sidecars(spark, path, postings, fingerprint)
             meta = _read_index_meta(spark, path)
         positional = None
         if meta.get("pos_fingerprint"):
@@ -2467,52 +2377,41 @@ class SearchIndex:
                 _layout_fingerprint(pos, "positions") == meta["pos_fingerprint"]
             ):
                 positional = pos
-        stats = spark.range(1).select(
-            F.lit(meta["n_docs"]).cast("long").alias("n_docs"),
-            F.lit(meta["sum_dl"]).cast("long").alias("sum_dl"),
-        )
-        index_bytes = (
-            postings._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
         return cls(
             postings,
-            stats,
-            stats_scalars=(meta["n_docs"], meta["sum_dl"]),
-            index_bytes=int(index_bytes),
-            vocab=spark.read.parquet(f"{path}/vocab"),
-            doc_ids=spark.read.parquet(f"{path}/doc_ids"),
-            positional=positional,
+            (meta["n_docs"], meta["sum_dl"]),
+            spark.read.parquet(f"{path}/vocab"),
+            spark.read.parquet(f"{path}/doc_ids"),
+            positional,
         )
 
     def search(self, query: str, k: int = 10,
                after: tuple | None = None) -> DataFrame:
         """Probe: identical scores from either tier; the tier only changes
-        the physical shape. A small loaded index (interactive sessions)
-        takes the single-scan window tier — one job per probe; a large or
-        size-unknown index (100 TB corpora, in-memory builds) takes the
+        the physical shape. An index whose size estimate is under
+        ``pk.search.probe.windowMaxBytes`` (default
+        :data:`PROBE_WINDOW_MAX_BYTES`; interactive sessions) takes the
+        single-scan window tier — one job per probe; a large or
+        size-unknown index (100 TB corpora, driver-local frames) takes the
         broadcast-df tier, whose map-side-combined count never shuffles
         posting rows by term — the skew-safe shape. The gate is the
-        whole-index estimate stored at load (conservative: a big index
-        with a rare-term query still takes the safe tier — correct either
-        way, and the per-probe cost of estimating the pruned subset would
-        exceed the saving). ``after`` = the ES search_after keyset cursor
-        (score, doc_id) of the previous page's last hit — deep pagination
-        without the from/size prefix re-rank (:func:`_bm25_score_agg`)."""
-        if self.stats_scalars is not None:
-            thresh = int(
-                self.postings.sparkSession.conf.get(
-                    "pk.search.probe.windowMaxBytes", str(PROBE_WINDOW_MAX_BYTES)
-                )
+        whole-index estimate taken at construction (conservative: a big
+        index with a rare-term query still takes the safe tier — correct
+        either way, and the per-probe cost of estimating the pruned subset
+        would exceed the saving). ``after`` = the ES search_after keyset
+        cursor (score, doc_id) of the previous page's last hit — deep
+        pagination without the from/size prefix re-rank
+        (:func:`_bm25_score_agg`)."""
+        thresh = int(
+            self.postings.sparkSession.conf.get(
+                "pk.search.probe.windowMaxBytes", str(PROBE_WINDOW_MAX_BYTES)
             )
-            if self.index_bytes is not None and self.index_bytes < thresh:
-                n_docs, sum_dl = self.stats_scalars
-                return bm25_from_postings_small(
-                    self.postings, n_docs, sum_dl, query, k=k, after=after
-                )
-            return bm25_from_postings(
-                self.postings, self.stats_scalars, query, k=k, after=after
-            )
-        return bm25_from_postings(self.postings, self.stats, query, k=k, after=after)
+        )
+        scorer = (
+            bm25_from_postings_small if self.index_bytes < thresh
+            else bm25_from_postings
+        )
+        return scorer(self.postings, self.stats, query, k=k, after=after)
 
     def more_like_this(
         self,
@@ -2523,11 +2422,10 @@ class SearchIndex:
         min_doc_freq: int = 1,
     ) -> DataFrame:
         """Related-docs probe from the index — ES more_like_this against
-        the persisted postings (see :func:`more_like_this_from_postings`);
-        output identical to the corpus-scan form."""
-        stats = self.stats_scalars if self.stats_scalars is not None else self.stats
+        the postings (see :func:`more_like_this_from_postings`); output
+        identical to the corpus-scan form."""
         return more_like_this_from_postings(
-            self.postings, stats, src_doc_id, k=k,
+            self.postings, self.stats, src_doc_id, k=k,
             max_query_terms=max_query_terms,
             min_term_freq=min_term_freq, min_doc_freq=min_doc_freq,
         )
@@ -2540,26 +2438,23 @@ class SearchIndex:
         prefix_length: int = 0,
     ) -> DataFrame:
         """Misspelling-tolerant probe — ES `match` with fuzziness=AUTO
-        against the persisted postings (see
+        against the terms dictionary and postings (see
         :func:`fuzzy_match_from_postings`); output identical to the
         corpus-scan :func:`fuzzy_match_search`."""
-        stats = self.stats_scalars if self.stats_scalars is not None else self.stats
         return fuzzy_match_from_postings(
-            self.postings, stats, query, k=k,
+            self.postings, self.stats, self.vocab, query, k=k,
             max_expansions=max_expansions, prefix_length=prefix_length,
-            vocab=self.vocab,
         )
 
     def prefix_search(self, query: str, k: int = 10,
                       max_expansions: int = 50) -> DataFrame:
         """Search-as-you-type probe — ES `match_bool_prefix` against the
-        persisted postings with the last token expanded against the terms
+        postings with the last token expanded against the terms
         dictionary (see :func:`prefix_search_from_postings`); output
         identical to the corpus-scan :func:`prefix_search`."""
-        stats = self.stats_scalars if self.stats_scalars is not None else self.stats
         return prefix_search_from_postings(
-            self.postings, stats, query, k=k,
-            max_expansions=max_expansions, vocab=self.vocab,
+            self.postings, self.stats, self.vocab, query, k=k,
+            max_expansions=max_expansions,
         )
 
     def suggest(self, term: str, max_edits: int = 2, prefix_length: int = 1,
@@ -2568,18 +2463,17 @@ class SearchIndex:
         dictionary (see :func:`term_suggest_from_vocab`): tlen-pruned
         dictionary slivers only, never a postings or corpus scan. Output
         identical to the corpus-scan :func:`term_suggest`."""
-        vocab = _probe_vocab(self.postings, self.vocab, ())
         return term_suggest_from_vocab(
-            vocab, term, max_edits=max_edits, prefix_length=prefix_length, k=k
+            self.vocab, term, max_edits=max_edits, prefix_length=prefix_length, k=k
         )
 
     def bool_search(self, **kwargs) -> DataFrame:
         """Composed ES ``bool`` query probed from the index artifacts
         alone (operators.boolquery.bool_search_from_index): match/fuzzy
-        clauses from the bucket-pruned postings + the terms-dictionary
-        sidecar, phrase clauses from the positional tier, membership
-        clauses as postings doc-id sets. Identical output to the
-        corpus-scan operators.boolquery.bool_search."""
+        clauses from the bucket-pruned postings + the terms dictionary,
+        phrase clauses from the positional tier, membership clauses as
+        postings doc-id sets. Identical output to the corpus-scan
+        operators.boolquery.bool_search."""
         from pandemic_knowledge_spark.operators.boolquery import (
             bool_search_from_index,
         )
@@ -2607,36 +2501,21 @@ class SearchIndex:
         reference re-bulk-loads whole indexes instead,
         insert_owid.py:282-284). Searches over the merged index are
         bit-identical to a from-scratch rebuild: per-doc tf/dl rows are
-        independent, df recounts over the unioned pruned postings, and the
-        one-row stats are exact integer sums.
+        independent, df recounts over the unioned pruned postings, and
+        the stats are exact integer sums (the batch's are collected here,
+        one job).
 
         Already-indexed doc ids in ``docs`` are DROPPED (first-accepted
         wins — the same policy as the incremental dedup ingest): without
         this, a re-crawled doc would hold two posting rows per term,
         inflating df and double-counting its scores. The guard anti-joins
-        the ``doc_ids`` sidecar — one row per doc, the tiny table — when
-        the index carries one (loaded or cached builds); only a bare
-        posting frame pays the full-postings distinct fallback."""
-        if self.doc_ids is not None:
-            indexed = self.doc_ids.select(F.col("doc_id").alias(id_col))
-        else:
-            indexed = self.postings.select(
-                F.col("doc_id").alias(id_col)
-            ).distinct()
+        the ``doc_ids`` set — one row per doc, the tiny table — never a
+        full-postings distinct. The disjoint doc sets also make the terms
+        dictionary summable (:func:`_merged_vocab`)."""
+        indexed = self.doc_ids.select(F.col("doc_id").alias(id_col))
         docs = docs.join(indexed, id_col, "left_anti")
         new_p, new_s = build_postings(docs, id_col, text_col)
-        stats = (
-            self.stats.unionByName(new_s)
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("sum_dl").alias("sum_dl"),
-            )
-        )
-        doc_ids = None
-        if self.doc_ids is not None:
-            doc_ids = self.doc_ids.unionByName(
-                new_p.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-            )
+        n_new, dl_new = _scalar_stats(new_s)
         positional = None
         if self.positional is not None:
             # per-(doc, term) position rows are independent across docs,
@@ -2645,28 +2524,12 @@ class SearchIndex:
             positional = self.positional.unionByName(
                 build_positional_postings(docs, id_col, text_col)
             )
-        vocab = None
-        if self.vocab is not None:
-            # per-term df IS summable here: the anti-join guard above
-            # guarantees old and new doc sets are disjoint, so each (term,
-            # doc) posting row lands in exactly one side — union the old
-            # dictionary with the batch term counts and sum, exactly as
-            # the persisted :meth:`append_save` path does. (r8 shipped
-            # with vocab=None on a wrong "df is not unionable" rationale,
-            # which silently sent merged-index fuzzy/suggest probes back
-            # to the full-postings aggregate the sidecar exists to kill.)
-            vocab = (
-                self.vocab.select("term", "df")
-                .unionByName(
-                    new_p.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-                )
-                .groupBy("term")
-                .agg(F.sum("df").cast("long").alias("df"))
-                .withColumn("tlen", F.length("term"))
-            )
         return SearchIndex(
-            self.postings.unionByName(new_p), stats, doc_ids=doc_ids,
-            vocab=vocab, positional=positional,
+            self.postings.unionByName(new_p),
+            (self.stats[0] + n_new, self.stats[1] + dl_new),
+            _merged_vocab(self.vocab, new_p),
+            self.doc_ids.unionByName(_doc_ids_of(new_p)),
+            positional,
         )
 
     @classmethod
@@ -2706,40 +2569,17 @@ class SearchIndex:
         docs = docs.join(indexed, id_col, "left_anti").localCheckpoint(eager=True)
         new_p, _new_s = build_postings(docs, id_col, text_col)
         new_p = new_p.localCheckpoint(eager=True)  # 3 consumers below
-        (
-            new_p.repartition("bucket")
-            .sortWithinPartitions("bucket", "term")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(f"{path}/postings")
-        )
-        new_docs = new_p.groupBy("doc_id").agg(F.first("dl").alias("dl"))
+        _write_bucketed(_bucket_laid(new_p), f"{path}/postings", mode="append")
+        new_docs = _doc_ids_of(new_p)
         new_docs.write.mode("append").parquet(f"{path}/doc_ids")
-        batch = new_docs.agg(
-            F.count(F.lit(1)).alias("n"), F.coalesce(F.sum("dl"), F.lit(0)).alias("s")
-        ).collect()[0]
-        merged_vocab = (
-            prev.vocab.select("term", "df")
-            .unionByName(new_p.groupBy("term").agg(F.count(F.lit(1)).alias("df")))
-            .groupBy("term")
-            .agg(F.sum("df").cast("long").alias("df"))
-            .withColumn("tlen", F.length("term"))
-            # materialize before overwriting the directory it reads from
-            .localCheckpoint(eager=True)
-        )
-        (
-            merged_vocab.repartition("tlen")
-            .sortWithinPartitions("tlen", "term")
-            .write.mode("overwrite")
-            .partitionBy("tlen")
-            .parquet(f"{path}/vocab")
-        )
-        n_docs, sum_dl = prev.stats_scalars
+        n_new, dl_new = _scalar_stats(_dl_stats(new_docs))
+        # materialize before overwriting the directory it reads from
+        _write_vocab(_merged_vocab(prev.vocab, new_p).localCheckpoint(eager=True), path)
         _write_index_meta(
             spark,
             path,
-            n_docs + int(batch["n"]),
-            sum_dl + int(batch["s"]),
+            prev.stats[0] + n_new,
+            prev.stats[1] + dl_new,
             _postings_fingerprint(spark.read.parquet(f"{path}/postings")),
         )
         return cls.load(spark, path)

@@ -3905,11 +3905,12 @@ FROM hits h JOIN documents d USING (doc_id)
 """,
 )
 def search_page_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3+X4 over the PERSISTED index path (SURVEY §4.2): build the posting
-    tables (bucket-partitioned term → (doc, tf, dl) lists + one-row corpus
-    stats — operators.search.build_postings), score the page purely from
-    postings (bm25_from_postings: bucket partition-pruning + term filter,
-    NO corpus tokenize at query time), then join back for display text and
+    """X3+X4 over the index path (SURVEY §4.2): build the SearchIndex
+    (bucket-partitioned term → (doc, tf, dl) postings, its (n_docs,
+    sum_dl) corpus stats as exact ints, the terms dictionary and doc-id
+    set), score the page purely from postings (SearchIndex.search: bucket
+    partition-pruning + term filter, size-gated df tier, NO corpus
+    tokenize at query time), then join back for display text and
     highlighting. Same oracle as search_page_highlighted proves the indexed
     probe is bit-identical to the direct corpus scorer — exactly the
     ES-index/news-app split: indexing at ingest, probing per keystroke."""

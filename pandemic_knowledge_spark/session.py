@@ -16,6 +16,14 @@ from pyspark.sql import SparkSession
 DEFAULT_SHUFFLE_PARTITIONS = "32"
 
 
+def default_driver_memory() -> str:
+    """Half of physical RAM in whole GB, clamped to [1g, 32g]: a heap the
+    host can actually back, leaving the other half to the Python workers
+    and the OS page cache."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(32, ram // 2 // (1 << 30)))}g"
+
+
 def get_spark(
     app_name: str = "pandemic-knowledge-spark",
     master: str | None = None,
@@ -43,7 +51,7 @@ def get_spark(
         # session; on a real cluster spark-submit owns this).
         .config(
             "spark.driver.memory",
-            os.environ.get("PK_DRIVER_MEMORY", "32g"),
+            os.environ.get("PK_DRIVER_MEMORY", default_driver_memory()),
         )
         # Whole-stage codegen emits a lot of JIT'd classes; the JVM's default
         # ~240 MB code cache fills after a handful of distinct query shapes,

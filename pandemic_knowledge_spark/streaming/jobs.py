@@ -203,17 +203,19 @@ def corpus_stream_index(
     text_col: str = "text",
 ):
     """Streaming search-index maintenance: every micro-batch of newly landed
-    documents tokenizes ONCE and appends its postings into the persisted
-    bucket-partitioned index (operators.search.SearchIndex.append_save) —
+    documents tokenizes ONCE into the persisted bucket-partitioned index —
     the streaming form of the reference's daily re-bulk-load into ES
     (insert_owid.py:282-290), except incremental: old documents are never
     re-tokenized, and a probe over the index equals a from-scratch rebuild
-    at every point in time. foreachBatch is at-least-once; the sink is
-    crash-idempotent anyway (SearchIndex.append_save drops already-indexed
-    doc ids, the parquet append commits atomically at job level, and stats
-    derive from postings — no second artifact to go stale), so a retried
-    micro-batch is a no-op."""
-    from pandemic_knowledge_spark.operators.search import SearchIndex, build_postings
+    at every point in time. The first batch builds and saves the index
+    (operators.search.SearchIndex.build(..., cache=False).save — the
+    single-exchange bucket layout, every sidecar); later batches append
+    (SearchIndex.append_save). foreachBatch is at-least-once; the sink is
+    crash-idempotent anyway (append_save drops already-indexed doc ids,
+    the parquet append commits atomically at job level, and meta commits
+    last, so a crash leaves a fingerprint mismatch the next load repairs),
+    so a retried micro-batch is a no-op."""
+    from pandemic_knowledge_spark.operators.search import SearchIndex
 
     from pyspark.sql.types import LongType
 
@@ -234,8 +236,7 @@ def corpus_stream_index(
                 batch_df.sparkSession, index_dir, batch_df, id_col, text_col
             )
         else:
-            postings, stats = build_postings(batch_df, id_col, text_col)
-            SearchIndex(postings, stats).save(index_dir)
+            SearchIndex.build(batch_df, id_col, text_col, cache=False).save(index_dir)
 
     return (
         raw.writeStream.foreachBatch(_index)

@@ -42,7 +42,7 @@ def main() -> None:
 
     from pandemic_knowledge_spark.plans import REGISTRY
     from pandemic_knowledge_spark.session import get_spark
-    from scripts.measure_r13 import plan_text
+    from scripts.measure import plan_text
 
     spark = get_spark(app_name="pk-expr-census")
     spark.sparkContext.setLogLevel("ERROR")

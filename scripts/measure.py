@@ -1,14 +1,16 @@
 """Per-query optimization measurement harness (guide §1).
 
 For each bench query (or --names):
-  * capture .explain("formatted") to plans/r14/<name>_<tag>.txt
+  * capture .explain("formatted") to <plans_dir>/<name>_<tag>.txt
   * count Exchange / BroadcastExchange / *EvalPython nodes in the plan
   * time median-of-N cache-cleared runs, BOTH the bench's collect() and the
     noop sink (computation only)
   * count Spark jobs triggered per run (build-time eager jobs included)
 
-Usage: python scripts/measure_r14.py [--tag before] [--names a,b] [--runs 3]
-       [--sf-dir /root/testdata/sf0.1] [--no-plans]
+Usage: python scripts/measure.py PLANS_DIR [--tag before] [--names a,b]
+       [--runs 3] [--sf-dir SF_DIR] [--no-plans]
+
+e.g. ``python scripts/measure.py plans/r14 --plans-only``
 """
 
 from __future__ import annotations
@@ -48,6 +50,7 @@ def count_nodes(plan: str) -> dict[str, int]:
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("plans_dir", help="where the formatted plans are written")
     ap.add_argument("--tag", default="before")
     ap.add_argument("--names", default="")
     ap.add_argument("--runs", type=int, default=3)
@@ -58,16 +61,16 @@ def main() -> None:
         action="store_true",
         help="capture .explain('formatted') + node counts only — no "
         "warmup, no job-count run, no timed runs (cheap final-plan "
-        "snapshot for the plans/r14 deliverables)",
+        "snapshot)",
     )
     ap.add_argument("--out", default="")
     args = ap.parse_args()
 
     names = [n for n in args.names.split(",") if n] or list(BENCH_QUERY_NAMES)
-    plans_dir = os.path.join(REPO, "plans", "r14")
+    plans_dir = args.plans_dir
     os.makedirs(plans_dir, exist_ok=True)
 
-    spark = get_spark(app_name="pk-measure-r14")
+    spark = get_spark(app_name="pk-measure")
     spark.sparkContext.setLogLevel("ERROR")
     sc = spark.sparkContext
 
@@ -141,7 +144,7 @@ def main() -> None:
     total = round(
         sum(r.get("collect_med", 0.0) for r in results.values()), 3
     )
-    out = args.out or f"/tmp/measure_r14_{args.tag}.json"
+    out = args.out or f"/tmp/measure_{args.tag}.json"
     with open(out, "w") as f:
         json.dump({"total_collect": total, "queries": results}, f, indent=1)
     print(json.dumps({"total_collect": total, "n": len(results), "out": out}))

@@ -119,16 +119,23 @@ def test_ivf_kmeans_fails_loudly_on_empty(spark):
 
 
 def test_r6_search_family_total(spark):
-    """MLT, suggester, significant terms, RRF: empty/token-free corpora
-    return empty frames (or empty rankings), never crash."""
+    """MLT, suggester, significant terms, RRF and both index-probe tiers:
+    empty/token-free corpora return empty frames (or empty rankings),
+    never crash."""
     from pandemic_knowledge_spark.operators.aggregates import significant_terms
     from pandemic_knowledge_spark.operators.search import (
+        SearchIndex,
+        bm25_from_postings,
+        bm25_from_postings_small,
         more_like_this,
         rrf_fuse,
         term_suggest,
     )
 
     for d in (_empty_docs(spark), _blank_docs(spark)):
+        idx = SearchIndex.build(d, "doc_id", "text", cache=False)
+        for probe in (bm25_from_postings, bm25_from_postings_small):
+            assert probe(idx.postings, idx.stats, "stream").collect() == []
         assert more_like_this(d, "doc_id", "text", 0).collect() == []
         assert term_suggest(d, "doc_id", "text", "stream").collect() == []
         assert (

@@ -370,48 +370,90 @@ def test_search_index_parquet_roundtrip_prunes_partitions(spark, tmp_path):
     assert "PartitionFilters: [bucket" in plan.replace("PartitionFilters: [isnotnull(bucket", "PartitionFilters: [bucket") or "bucket#" in plan.split("PartitionFilters")[1].split("]")[0]
 
 
-def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path):
-    """Probe-tier dispatch regression pin (the r4 probe-latency bug):
-
-    1. load() derives corpus stats ONCE, eagerly — the probe plan must not
-       re-aggregate the whole postings table per query (exactly one parquet
-       scan in the small-tier plan, and it carries the bucket partition
-       filter).
-    2. A small loaded index takes the single-scan window tier; forcing the
-       gate to 0 bytes flips to the broadcast-df scale tier; both tiers
-       return identical rows.
-    3. The eager (n_docs, sum_dl) scalars equal the full derivation.
-    """
+def _index_by_path(spark, docs, path, tmp_path):
+    """The same corpus indexed through one SearchIndex construction path;
+    the split ones (merge / append_save) index the even doc ids first and
+    add the odd ones."""
     from pandemic_knowledge_spark.operators.search import SearchIndex
+
+    old = docs.filter(F.col("doc_id") % 2 == 0)
+    new = docs.filter(F.col("doc_id") % 2 == 1)
+    where = str(tmp_path / "idx")
+    if path == "cached":
+        return SearchIndex.build(docs, "doc_id", "text").warm()
+    if path == "uncached":
+        return SearchIndex.build(docs, "doc_id", "text", cache=False)
+    if path == "loaded":
+        SearchIndex.build(docs, "doc_id", "text", cache=False).save(where)
+        return SearchIndex.load(spark, where)
+    if path == "merged":
+        return SearchIndex.build(old, "doc_id", "text", cache=False).merge(new)
+    SearchIndex.build(old, "doc_id", "text", cache=False).save(where)
+    return SearchIndex.append_save(spark, where, new)
+
+
+@pytest.mark.parametrize(
+    "path", ["cached", "uncached", "loaded", "merged", "appended"]
+)
+def test_search_index_probe_tiers_and_eager_stats(spark, tmp_path, path):
+    """One SearchIndex shape from every construction path (and the r4
+    probe-latency pin):
+
+    1. ``stats`` is the exact (n_docs, sum_dl) int tuple of a from-scratch
+       derivation; ``index_bytes`` is an int; vocab and doc_ids exist.
+    2. The stats fold into the probe as literals — no plan re-aggregates
+       them (no one-row cross join), and a loaded index's probe scans the
+       postings once, with the bucket partition filter.
+    3. A small index takes the single-scan window tier; forcing the gate
+       to 0 bytes flips to the broadcast-df scale tier; on both tiers
+       pages 1 and 2 (search_after) equal the corpus-scan scorer's.
+    """
+    from pandemic_knowledge_spark.functions.text import tokenize
+    from pandemic_knowledge_spark.operators.search import bm25_search
     from pandemic_knowledge_spark.tables import load
 
     docs = load(spark, "/root/testdata/sf0.001", "documents")
-    SearchIndex.build(docs, "doc_id", "text", cache=False).save(str(tmp_path / "idx"))
-    idx = SearchIndex.load(spark, str(tmp_path / "idx"))
+    idx = _index_by_path(spark, docs, path, tmp_path)
 
-    # eager stats match a from-scratch derivation
-    n_docs, sum_dl = idx.stats_scalars
-    from pandemic_knowledge_spark.functions.text import tokenize
-
-    base = docs.select(F.col("doc_id"), F.size(tokenize("text")).alias("dl"))
+    base = docs.select(F.size(tokenize("text")).alias("dl"))
     exp = base.agg(F.count(F.lit(1)), F.sum("dl")).collect()[0]
-    assert (n_docs, sum_dl) == (exp[0], exp[1])
+    assert idx.stats == (exp[0], exp[1])
+    assert all(type(v) is int for v in idx.stats)
+    assert type(idx.index_bytes) is int
+    assert idx.vocab is not None and idx.doc_ids is not None
 
-    q = "virus outbreak"
+    q = "hash stream"
+    want = bm25_search(docs, "doc_id", "text", q, k=16).collect()
+    assert len(want) == 16
+
+    def pages():
+        first = idx.search(q, k=8).collect()
+        last = first[-1]
+        return first + idx.search(q, k=8, after=(last.score, last.doc_id)).collect()
+
     small = idx.search(q, k=8)
     plan = small._jdf.queryExecution().executedPlan().toString()
     assert "Window" in plan  # small tier selected for a tiny index
-    assert plan.count("Scan parquet") == 1  # stats folded, not re-derived
+    assert "BroadcastNestedLoopJoin" not in plan  # stats are literals
+    if path == "loaded":
+        assert plan.count("Scan parquet") == 1  # stats folded, not re-derived
+        assert "PartitionFilters: [" in plan and "bucket" in plan.split(
+            "PartitionFilters: ["
+        )[1].split("]")[0]
+    assert pages() == want
 
     spark.conf.set("pk.search.probe.windowMaxBytes", "0")
     try:
-        big = idx.search(q, k=8)
-        big_plan = big._jdf.queryExecution().executedPlan().toString()
+        big_plan = idx.search(q, k=8)._jdf.queryExecution().executedPlan().toString()
         assert "Window" not in big_plan  # scale tier: broadcast df, no
         # posting-row shuffle by term
-        assert big.collect() == small.collect()
+        assert "BroadcastNestedLoopJoin" not in big_plan
+        assert pages() == want
     finally:
         spark.conf.unset("pk.search.probe.windowMaxBytes")
+        if path == "cached":
+            for frame in (idx.postings, idx.vocab, idx.doc_ids):
+                frame.unpersist()
 
 
 def test_spark_crc32_matches_python_bucket(spark):
@@ -619,7 +661,7 @@ def test_fuzzy_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path):
         via_build = [
             (r.doc_id, r.score)
             for r in fuzzy_match_from_postings(
-                idx.postings, idx.stats, q, k=10
+                idx.postings, idx.stats, idx.vocab, q, k=10
             ).collect()
         ]
         via_loaded = [
@@ -627,7 +669,9 @@ def test_fuzzy_index_probe_matches_corpus_scan(spark, sf_dir, tmp_path):
         ]
         assert direct == via_build == via_loaded and len(direct) > 0, q
     # a query with no in-band expansion anywhere: empty, right schema
-    none = fuzzy_match_from_postings(idx.postings, idx.stats, "zzzzzzzzzz")
+    none = fuzzy_match_from_postings(
+        idx.postings, idx.stats, idx.vocab, "zzzzzzzzzz"
+    )
     assert none.count() == 0 and none.columns == ["doc_id", "score"]
 
 

@@ -19,8 +19,6 @@ from pyspark.sql import functions as F
 from pandemic_knowledge_spark.operators.search import (
     SearchIndex,
     _fuzzy_selected,
-    _probe_vocab,
-    fuzzy_auto_band,
     fuzzy_match_search,
     prefix_search,
     term_suggest,
@@ -69,7 +67,7 @@ def test_save_writes_vocab_docids_meta_sidecars(spark, tmp_path):
     from_sidecar = idx.vocab.select("term", "df").collect()
     assert sorted(map(tuple, from_sidecar)) == sorted(map(tuple, from_postings))
     # doc_ids sidecar = one row per doc with its dl norm
-    n_docs, sum_dl = idx.stats_scalars
+    n_docs, sum_dl = idx.stats
     assert idx.doc_ids.count() == n_docs
     assert idx.doc_ids.agg(F.sum("dl")).collect()[0][0] == sum_dl
 
@@ -111,28 +109,14 @@ def test_fuzzy_probe_expansion_scans_vocab_sidecar_not_postings(spark, tmp_path)
     (operators.search.fuzzy_match_from_postings)."""
     _docs, path = _saved(spark, tmp_path)
     idx = SearchIndex.load(spark, path)
-    qterm = "strean"
-    band = fuzzy_auto_band(len(qterm))
-    rows = [
-        (qterm, band, n)
-        for n in range(max(1, len(qterm) - band), len(qterm) + band + 1)
-    ]
     with _full_plan_paths(spark):
-        v = _probe_vocab(idx.postings, idx.vocab, (r[2] for r in rows))
-        sel = _fuzzy_selected(spark, v, rows, [], 50, 0)
+        sel = _fuzzy_selected(spark, idx.vocab, ["strean"], 50, 0)
         plan = sel._jdf.queryExecution().executedPlan().toString()
         assert "/vocab" in plan
         assert "/postings" not in plan  # dictionary slivers only
         # the length band reaches the scan as a partition filter
         part = plan.split("PartitionFilters: [")[1].split("]")[0]
         assert "tlen" in part
-        # and the in-memory fallback (vocab=None) still derives from postings
-        v0 = _probe_vocab(idx.postings, None, (r[2] for r in rows))
-        p0 = (
-            _fuzzy_selected(spark, v0, rows, [], 50, 0)
-            ._jdf.queryExecution().executedPlan().toString()
-        )
-        assert "/postings" in p0
 
 
 def test_suggest_probe_plan_prunes_tlen_partitions(spark, tmp_path):
@@ -227,9 +211,7 @@ def test_load_repairs_sidecars_after_simulated_crash(spark, tmp_path):
     )
     idx = SearchIndex.load(spark, path)  # must repair, not trust meta
     full = SearchIndex.build(docs, "doc_id", "text", cache=False)
-    assert idx.stats_scalars == tuple(
-        full.stats.collect()[0][i] for i in range(2)
-    )
+    assert idx.stats == full.stats
     fq = "a sparc strean"
     assert (
         idx.fuzzy_search(fq, k=10).collect()
@@ -248,7 +230,7 @@ def test_append_save_refreshes_sidecars_incrementally(spark, tmp_path):
     updated = SearchIndex.append_save(spark, inc, new)
     SearchIndex.build(docs, "doc_id", "text", cache=False).save(full)
     want = SearchIndex.load(spark, full)
-    assert updated.stats_scalars == want.stats_scalars
+    assert updated.stats == want.stats
     assert sorted(map(tuple, updated.vocab.select("term", "df").collect())) == sorted(
         map(tuple, want.vocab.select("term", "df").collect())
     )
@@ -290,7 +272,7 @@ def test_inmemory_build_caches_dictionary_for_interactive_probes(spark):
             == term_suggest(docs, "doc_id", "text", st).collect()
         )
     finally:
-        for frame in (idx.postings, idx.stats, idx.vocab, idx.doc_ids):
+        for frame in (idx.postings, idx.vocab, idx.doc_ids):
             frame.unpersist()
 
 
